@@ -38,17 +38,14 @@ def linked_mention_stream(
 ) -> DataFrame:
     """Stateless extract+link over a streaming turns DataFrame.
 
-    Both stages are streaming-safe by construction: extraction is a
-    per-row explode + broadcast join (no window functions on the stream)
-    and linking is broadcast-only, so the plan stays incrementalizable.
-    Uses the 'slice' strategy because 'lead' needs a window over the
-    stream, which Structured Streaming forbids.
+    Both stages are streaming-safe by construction: on a stream the
+    extractor reads each token's followers from the turn's own token array,
+    not a window (Structured Streaming forbids windows), and linking is
+    broadcast-only, so the plan stays incrementalizable.
     """
     alias_grams = X.prepare_alias_grams(vocab_tables["aliases"])
     alias_table = L.prepare_alias_table(vocab_tables["aliases"])
-    mentions = X.extract_mentions(
-        stream_turns, alias_grams, keys=tuple(keys), strategy="slice"
-    )
+    mentions = X.extract_mentions(stream_turns, alias_grams, keys=tuple(keys))
     return L.link_mentions(
         mentions, alias_table, vocab_tables.get("stoplist"), keys=tuple(keys),
         keep="best",

@@ -1,4 +1,4 @@
-"""Extraction operator: JVM path vs Arrow path vs pandas oracle."""
+"""Extraction operator: batch and stream readers vs the pandas oracle."""
 
 import pandas as pd
 
@@ -19,13 +19,6 @@ def test_jvm_extract_matches_oracle(spark, vocab, vocab_tables, transcripts_df,
     exp = oracle_extract(transcripts_pdf, vocab)
     assert len(exp) > 100, "fixture should embed plenty of mentions"
     pd.testing.assert_frame_equal(_sorted(got), _sorted(exp), check_dtype=False)
-
-
-def test_arrow_extract_matches_jvm(spark, vocab_tables, transcripts_df):
-    grams = X.prepare_alias_grams(vocab_tables["aliases"])
-    jvm = _sorted(X.extract_mentions(transcripts_df, grams).toPandas())
-    arrow = _sorted(X.extract_mentions_arrow(transcripts_df, grams).toPandas())
-    pd.testing.assert_frame_equal(jvm, arrow, check_dtype=False)
 
 
 def test_longest_match_resolution(spark, vocab, vocab_tables, transcripts_df,
@@ -53,25 +46,37 @@ def test_case_and_punctuation_insensitive(spark, vocab_tables):
     assert set(got.loc[got["alias_lc"] == some, "turn_idx"]) == {0, 2}
 
 
-def test_single_scan_matches_union(spark, vocab_tables, transcripts_df):
+def test_stream_extract_matches_oracle(spark, vocab, vocab_tables,
+                                       transcripts_pdf, tmp_path):
+    """A stream takes the windowless follower reader; it must match the
+    oracle exactly as the batch (lead window) reader does."""
+    from ckg_spark.sources.transcripts import TRANSCRIPT_SCHEMA
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    transcripts_pdf.to_parquet(in_dir / "part0.parquet", index=False)
+    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(str(in_dir))
+    assert stream.isStreaming
     grams = X.prepare_alias_grams(vocab_tables["aliases"])
-    union = _sorted(X.extract_mentions(transcripts_df, grams).toPandas())
-    single = _sorted(
-        X.extract_mentions(transcripts_df, grams, single_scan=True).toPandas()
-    )
-    pd.testing.assert_frame_equal(union, single, check_dtype=False)
+    q = (X.extract_mentions(stream, grams).writeStream.format("memory")
+         .queryName("stream_mentions").outputMode("append")
+         .trigger(availableNow=True).start())
+    q.awaitTermination(180)
+    got = spark.table("stream_mentions").toPandas()
+    exp = oracle_extract(transcripts_pdf, vocab)
+    pd.testing.assert_frame_equal(_sorted(got), _sorted(exp), check_dtype=False)
 
 
-def test_strategies_all_agree(spark, vocab_tables, transcripts_df):
+def test_batch_plan_has_one_exchange_and_two_broadcast_joins(spark, vocab_tables,
+                                                             transcripts_df):
+    """The lead window's hash Exchange is the only shuffle; the first-token
+    flags and the alias set are the two broadcast joins."""
     grams = X.prepare_alias_grams(vocab_tables["aliases"])
-    lead = _sorted(X.extract_mentions(transcripts_df, grams, strategy="lead").toPandas())
-    union = _sorted(X.extract_mentions(transcripts_df, grams, strategy="union").toPandas())
-    single = _sorted(X.extract_mentions(transcripts_df, grams, single_scan=True).toPandas())
-    sliced = _sorted(X.extract_mentions(transcripts_df, grams, strategy="slice").toPandas())
-    hashed = _sorted(X.extract_mentions(transcripts_df, grams, strategy="hash").toPandas())
-    fused = _sorted(X.extract_mentions(transcripts_df, grams, strategy="fused").toPandas())
-    pd.testing.assert_frame_equal(lead, union, check_dtype=False)
-    pd.testing.assert_frame_equal(lead, single, check_dtype=False)
-    pd.testing.assert_frame_equal(lead, sliced, check_dtype=False)
-    pd.testing.assert_frame_equal(lead, hashed, check_dtype=False)
-    pd.testing.assert_frame_equal(lead, fused, check_dtype=False)
+    m = X.extract_mentions(transcripts_df, grams)
+    m.collect()
+    # the adaptive plan's final form (its toString repeats the initial plan)
+    plan = m._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "ShuffledHashJoin" not in plan, plan
+    assert plan.count("BroadcastHashJoin") == 2, plan

@@ -2,6 +2,7 @@
 single-process pandas oracle on arbitrary text, and merge_edges upserts."""
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -20,14 +21,14 @@ _FRAGMENTS = [
 ]
 
 
-def _mini_vocab() -> Vocab:
+def _mini_vocab(forms=_ALIASES) -> Vocab:
     aliases = pd.DataFrame(
         [(f"E{i:02d}", "NAME", a, a.lower(), 1, "Entity")
-         for i, a in enumerate(_ALIASES)],
+         for i, a in enumerate(forms)],
         columns=["ident", "source", "alias", "alias_lc", "rank", "entity_type"],
     )
     terms = pd.DataFrame(
-        [(f"E{i:02d}", "Entity", a, "", "-20", []) for i, a in enumerate(_ALIASES)],
+        [(f"E{i:02d}", "Entity", a, "", "-20", []) for i, a in enumerate(forms)],
         columns=["id", "label", "name", "description", "type", "synonyms"],
     )
     empty = pd.DataFrame(columns=["entity_type", "ident"])
@@ -36,6 +37,17 @@ def _mini_vocab() -> Vocab:
         columns=["ident_a", "ident_b"]))
 
 
+# degenerate vocabularies the matcher must still get right: no multi-word
+# alias, no unigram alias, no alias at all
+_ALIAS_SETS = {
+    "full": _ALIASES,
+    "unigram_only": ["flu", "x", "xx"],
+    "multiword_only": ["flu shot", "bird flu", "type 2", "a b c"],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("alias_set", list(_ALIAS_SETS))
 @settings(max_examples=12, deadline=None)
 @given(
     st.lists(
@@ -43,8 +55,8 @@ def _mini_vocab() -> Vocab:
         min_size=1, max_size=20,
     )
 )
-def test_extractor_agrees_with_oracle_on_generated_text(spark, texts):
-    vocab = _mini_vocab()
+def test_extractor_agrees_with_oracle_on_generated_text(spark, alias_set, texts):
+    vocab = _mini_vocab(_ALIAS_SETS[alias_set])
     pdf = pd.DataFrame({
         "conv_id": ["c"] * len(texts),
         "turn_idx": range(len(texts)),
@@ -52,10 +64,13 @@ def test_extractor_agrees_with_oracle_on_generated_text(spark, texts):
     })
     df = spark.createDataFrame(pdf)
     grams = X.prepare_alias_grams(
-        spark.createDataFrame(vocab.aliases[["alias_lc"]])
+        spark.createDataFrame(vocab.aliases[["alias_lc"]], "alias_lc string")
     )
+    mentions = X.extract_mentions(df, grams)
+    assert mentions.dtypes[1:] == [("turn_idx", "bigint"), ("pos", "int"),
+                                   ("n_words", "int"), ("alias_lc", "string")]
     got = (
-        X.extract_mentions(df, grams)
+        mentions
         .toPandas()
         .sort_values(["conv_id", "turn_idx", "pos", "n_words", "alias_lc"])
         .reset_index(drop=True)

@@ -542,6 +542,19 @@ def test_read_files_empty_selection_returns_empty_frame(spark, tmp_path):
     assert out is not None and out.count() == 0
     assert set(out.columns) == set(T.read(spark, d).columns)
 
+    # schema-evolved table: the empty frame carries the widest schema, the
+    # same as read() and read_files(all files), not the first file's
+    e = str(tmp_path / "evolved")
+    T.append(spark.createDataFrame(pd.DataFrame({"k": ["a"], "n": [1]})), e)
+    T.append(spark.createDataFrame(
+        pd.DataFrame({"k": ["b"], "n": [2], "extra": ["x"]})), e)
+    assert T.read_manifest(e).get("schema_evolved")
+    out = T.read_files(spark, e, [])
+    assert out.count() == 0
+    full = T.read_files(spark, e, T.read_manifest(e)["files"])
+    assert out.columns == T.read(spark, e).columns == full.columns
+    assert out.columns == ["k", "n", "extra"]
+
 
 def test_read_files_mixed_partition_entries_union(spark, tmp_path):
     """A selection spanning a manifest-partitioned file and a file with no
